@@ -101,16 +101,27 @@ object Dedupe {
     * key+seq columns — a columnar source reads nothing else, and the
     * exchange moves ~40-byte rows instead of full payloads; pass 2 re-scans
     * the input and keeps exactly the winner rows via a BROADCAST join on
-    * (key, seq). Payload bytes are never shuffled and never copied through
-    * agg buffers (the single-pass [[lwwTyped]] copies the payload struct
-    * into its buffer on every seq advance — O(events) copies on
-    * monotone-seq logs, measured 4-8 s/1M×1.1KB events vs ~1 s here).
+    * (key, seq). Events that lose never reach a shuffle or an agg buffer
+    * (the single-pass [[lwwTyped]] copies the payload struct into its
+    * buffer on every seq advance — O(events) copies on monotone-seq logs,
+    * measured 4-8 s/1M×1.1KB events vs ~1 s here). The winners' payloads
+    * ARE shuffled once: the join output keeps the input's partitioning, so
+    * the `dropDuplicates(keys)` that collapses equal-(key, seq) duplicates
+    * plans a hash exchange on the keys plus a SortAggregate over
+    * `first(payload)` — one row per key per input partition after the
+    * partial aggregate.
     *
     * Scale-adaptive: when the winner set exceeds `maxKeys` (too big to
     * broadcast — the steady-state shape for huge backfill batches) it falls
     * back to [[lwwTyped]], whose shuffle is O(map-side-combined winners).
     * Equal-(key, seq) duplicates (idempotent re-delivered writes) collapse
     * to one arbitrary row — the same contract as LwwAgg's first-seen tie.
+    *
+    * Null seq: a key whose every event has a null seq has a null max(seq),
+    * which the equi-join on (key, seq) never matches, so the key is DROPPED.
+    * [[lwwTyped]] — and hence this function above `maxKeys` — keeps such a
+    * key with a null payload (and null seq). A key with at least one
+    * non-null seq resolves the same way on both paths.
     */
   def lwwBroadcast(df: DataFrame, keys: Seq[String], seqCol: String,
                    maxKeys: Long = 1000000L): DataFrame = {

@@ -760,9 +760,31 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     }
   }
 
+  /** The one place table data files become a DataFrame, planned from the
+    * manifest entries alone (see [[ManifestFileIndex]]): no listing job, no
+    * per-path existence check. Paths are qualified exactly as
+    * `spark.read.parquet` qualifies them, because MOR [[resolve]] breaks
+    * equal-seq ties on `input_file_name()`. The data schema is the table
+    * schema made nullable, as the file source makes a user schema.
+    */
   private def readFiles(spark: SparkSession, files: Seq[DataFile]): DataFrame =
     if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files.map(f => s"$root/${f.path}"): _*)
+    else {
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val statuses = files.map { f =>
+        // legacy manifest entries record no size (0); parquet is never empty
+        val len = if (f.sizeBytes > 0) f.sizeBytes else Files.size(Paths.get(root, f.path))
+        new org.apache.hadoop.fs.FileStatus(len, false, 0, 0L, 0L,
+          fs.makeQualified(new org.apache.hadoop.fs.Path(s"$root/${f.path}")))
+      }
+      spark.baseRelationToDataFrame(
+        org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+          ManifestFileIndex(statuses), partitionSchema = new StructType(),
+          dataSchema = StructType(schema.map(_.copy(nullable = true))), bucketSpec = None,
+          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+          options = Map.empty)(spark))
+    }
 
   /** Point lookup with bucket pruning + manifest key-bound file skipping:
     * the key's bucket manifest is read, then files whose recorded
@@ -784,9 +806,11 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     * buckets — bucket pruning cannot serve "everything in repo X" — but
     * after sort-order compaction each data file covers a narrow repo
     * range, so the manifest key bounds skip most files table-wide.
-    * Files without bounds (legacy manifests, fresh merge output) are
-    * always read — pruning only ever drops files that provably lack the
-    * repo.
+    * Every file a commit writes carries bounds ([[listDataFiles]] records
+    * them from its footer), but an unsorted merge file spans most of the
+    * key range and rarely prunes. Files without bounds (legacy manifests,
+    * footers without column stats) are always read — pruning only ever
+    * drops files that provably lack the repo.
     */
   def readWhereRepo(spark: SparkSession, repo: String): DataFrame = {
     val h = head()
@@ -1822,6 +1846,11 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
   private def listDataFiles(dir: Path, rel: String): Seq[DataFile] = {
     if (!Files.exists(dir)) return Nil
     val conf = new org.apache.hadoop.conf.Configuration()
+    // one options object for every footer: open(InputFile) rebuilds it
+    // from the conf per file, which cost ~15 ms a file on 4 cores. Each
+    // close() releases the options' codec factory; footer reads never
+    // create a codec, so sharing it across the readers is safe
+    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     val paths = scala.util.Using.resource(Files.walk(dir)) { stream =>
       stream.iterator.asScala
         .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p)).toSeq
@@ -1835,7 +1864,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
       val bucket = p.getParent.getFileName.toString.stripPrefix("_b=").toInt
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, opts)
       val (count, bounds) = try {
         val blocks = r.getFooter.getBlocks.asScala.toSeq
         // per-file key bounds from the footer's per-row-group column stats

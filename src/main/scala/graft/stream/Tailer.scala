@@ -60,23 +60,29 @@ object Tailer {
     * before: a crash can lose the unflushed tail — lineage, the
     * correctness-bearing table, keeps its own per-batch post-commit write).
     */
-  private final class MetricsSink(spark: SparkSession, dir: String) {
+  private final class MetricsSink(dir: String) {
     private val buf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, Double, java.sql.Timestamp)]
     private var batches = 0
-    private val flushEvery = scala.util.Try(spark.conf.get(
-      "spark.graft.metrics.flushEveryBatches").toInt).getOrElse(32)
+    // the live session of the latest batch (bound by sinkFor before every
+    // add), never the one the sink was created under — that one may have
+    // stopped while the JVM started another on the same metrics dir
+    private var session: SparkSession = null
+    def bind(spark: SparkSession): Unit = synchronized { session = spark }
+    def stopped: Boolean = synchronized { session == null || session.sparkContext.isStopped }
     def add(batchId: Long, rows: Seq[(String, Double)]): Unit = {
       val ts = new java.sql.Timestamp(System.currentTimeMillis)
       val flushNow = synchronized {
         rows.foreach { case (n, v) => buf += ((batchId, n, v, ts)) }
         batches += 1
-        batches >= flushEvery
+        batches >= scala.util.Try(session.conf.get(
+          "spark.graft.metrics.flushEveryBatches").toInt).getOrElse(32)
       }
       if (flushNow) flush()
     }
     def flush(): Unit = synchronized {
-      if (buf.nonEmpty && !spark.sparkContext.isStopped) {
+      if (buf.nonEmpty && !stopped) {
+        val spark = session
         import spark.implicits._
         buf.toSeq.toDF("batchId", "name", "value", "ts")
           .coalesce(1).write.mode(SaveMode.Append).parquet(dir)
@@ -87,11 +93,24 @@ object Tailer {
   }
   private val metricsSinks =
     new java.util.concurrent.ConcurrentHashMap[String, MetricsSink]()
+  /** The sink for `dir`, bound to `spark` atomically with respect to
+    * [[flushMetrics]]' eviction, so a live batch never lands in a dropped sink.
+    */
   private def sinkFor(spark: SparkSession, dir: String): MetricsSink =
-    metricsSinks.computeIfAbsent(dir, d => new MetricsSink(spark, d))
-  /** Flush any buffered metrics for `dir` (stream end / test hooks). */
+    metricsSinks.compute(dir, (d, cur) => {
+      val s = if (cur == null) new MetricsSink(d) else cur
+      s.bind(spark)
+      s
+    })
+  /** Flush any buffered metrics for `dir` (stream end / test hooks) with the
+    * session of its latest batch. A sink whose session has stopped cannot
+    * write: it is dropped, and the next batch on `dir` starts a fresh one.
+    */
   def flushMetrics(dir: String): Unit =
-    Option(metricsSinks.get(dir)).foreach(_.flush())
+    Option(metricsSinks.get(dir)).foreach { s =>
+      s.flush()
+      metricsSinks.computeIfPresent(dir, (_, cur) => if ((cur eq s) && s.stopped) null else cur)
+    }
 
   /** One micro-batch: raw events → lineage stats → normalize → LWW → MERGE. */
   def applyBatch(table: LakeTable, cfg: TailerConfig)(raw: DataFrame, batchId: Long): Unit = {

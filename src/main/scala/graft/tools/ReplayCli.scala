@@ -91,16 +91,21 @@ object ReplayCli {
           sys.exit(2)
         }
       }
+      // GRAFT_COMPACT_WAVE=<k>: memory-bounded wave compaction (≤k buckets
+      // per job+commit) — the r6 fix for full-table rewrites whose working
+      // set exceeds the heap (r5 256M/32c OOM); k <= 0 compacts in one wave
+      val wave = sys.env.get("GRAFT_COMPACT_WAVE").map { a =>
+        a.toIntOption.getOrElse {
+          System.err.println(s"usage: GRAFT_COMPACT_WAVE=<buckets per wave> ReplayCli compact <workDir>; got '$a'")
+          sys.exit(2)
+        }
+      }.filter(_ > 0)
       val spark = Sessions.local(sys.env.getOrElse("GRAFT_CORES", "8").toInt, "graft-compact")
       // open (NOT create-with-default-buckets): compacting with a bucket
       // count different from the table's would silently rebucket the data
       val table = LakeTable.open(s"$workDir/table")
       val before = table.head()
       val tombs = table.readWithTombstones(spark).filter(col("deleted")).count()
-      // GRAFT_COMPACT_WAVE=<k>: memory-bounded wave compaction (≤k buckets
-      // per job+commit) — the r6 fix for full-table rewrites whose working
-      // set exceeds the heap (r5 256M/32c OOM)
-      val wave = sys.env.get("GRAFT_COMPACT_WAVE").map(_.toInt).filter(_ > 0)
       table.compact(spark, gcTombstones = gc, targetFileRows = targetRows,
         maxBucketsPerWave = wave)
       val after = table.head()

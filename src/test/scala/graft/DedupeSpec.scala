@@ -6,9 +6,12 @@ import graft.gen.ChangeLogGen
 import graft.gen.ChangeLogGen.GenConfig
 import graft.model.Model._
 import org.apache.spark.sql.functions._
-/** Property tests for the LWW core (SURVEY §5.2): all three dedupe
+/** Property tests for the LWW core (SURVEY §5.2): the dedupe
   * implementations agree with each other and with a HashMap fold, at any
-  * parallelism, and are idempotent under log duplication. (Properties run
+  * parallelism, and are idempotent under log duplication. The production
+  * default, [[Dedupe.lwwBroadcast]], runs on both of its paths: the
+  * broadcast join-back (default `maxKeys`) and the [[Dedupe.lwwTyped]]
+  * fallback (`maxKeys = 0`). (Properties run
   * as seeded multi-trial loops: the offline cache has no scalatestplus
   * bridge, so generators are hand-rolled and fully deterministic.)
   */
@@ -27,7 +30,13 @@ class DedupeSpec extends SparkSpec {
   private lazy val normalized =
     Normalize(spark.read.schema(changeLogSchema).parquet(dedupeLogDir)).cache()
 
-  test("all six LWW implementations agree on a generated log") {
+  private type Lww = (org.apache.spark.sql.DataFrame, Seq[String], String) => org.apache.spark.sql.DataFrame
+  /** lwwBroadcast on its join-back path and on its fallback path. */
+  private val broadcastPaths: Seq[(String, Lww)] =
+    Seq("lwwBroadcast" -> (Dedupe.lwwBroadcast(_, _, _)),
+      "lwwBroadcast(maxKeys=0)" -> (Dedupe.lwwBroadcast(_, _, _, 0L)))
+
+  test("all LWW implementations agree on a generated log, lwwBroadcast on both paths") {
     val a = lwwKeys(Dedupe.lww(normalized, Seq("repo", "path"), "seq"))
     assert(a.nonEmpty)
     assert(a === lwwKeys(Dedupe.lwwSalted(normalized, Seq("repo", "path"), "seq", 8)))
@@ -35,6 +44,9 @@ class DedupeSpec extends SparkSpec {
     assert(a === lwwKeys(Dedupe.lwwTyped(normalized, Seq("repo", "path"), "seq")))
     assert(a === lwwKeys(Dedupe.lwwTypedSalted(normalized, Seq("repo", "path"), "seq", 8)))
     assert(a === lwwKeys(Dedupe.lwwJoin(normalized, Seq("repo", "path"), "seq")))
+    broadcastPaths.foreach { case (name, f) =>
+      assert(a === lwwKeys(f(normalized, Seq("repo", "path"), "seq")), name)
+    }
   }
 
   test("lwwJoin collapses re-delivered identical (key, max-seq) rows to one row per key") {
@@ -50,9 +62,10 @@ class DedupeSpec extends SparkSpec {
   test("every variant resolves payload/key columns with dots in the name literally") {
     val df = Seq(("r1", 1L, 10), ("r1", 2L, 20), ("r2", 7L, 70))
       .toDF("id", "seq", "meta.size")
-    val fns: Seq[(org.apache.spark.sql.DataFrame, Seq[String], String) => org.apache.spark.sql.DataFrame] =
-      Seq(Dedupe.lww, Dedupe.lwwTyped, Dedupe.lwwJoin, Dedupe.lwwWindow,
-        Dedupe.lwwSalted(_, _, _, 4), Dedupe.lwwTypedSalted(_, _, _, 4))
+    val fns: Seq[Lww] =
+      Seq[Lww](Dedupe.lww, Dedupe.lwwTyped, Dedupe.lwwJoin, Dedupe.lwwWindow,
+        Dedupe.lwwSalted(_, _, _, 4), Dedupe.lwwTypedSalted(_, _, _, 4)) ++
+        broadcastPaths.map(_._2)
     fns.foreach { f =>
       val out = f(df, Seq("id"), "seq")
       assert(out.columns.toSeq === df.columns.toSeq, "original column order")
@@ -90,6 +103,12 @@ class DedupeSpec extends SparkSpec {
     val once = lwwKeys(Dedupe.lww(normalized, Seq("repo", "path"), "seq"))
     val twice = lwwKeys(Dedupe.lww(normalized.union(normalized), Seq("repo", "path"), "seq"))
     assert(once === twice)
+    // every winner arrives twice with the same seq: one row per key survives
+    broadcastPaths.foreach { case (name, f) =>
+      val out = f(normalized.union(normalized), Seq("repo", "path"), "seq")
+      assert(out.count() === once.size.toLong, name)
+      assert(lwwKeys(out) === once, name)
+    }
   }
 
   test("property: LWW over random event sets equals HashMap fold oracle (20 seeded trials)") {
@@ -102,17 +121,31 @@ class DedupeSpec extends SparkSpec {
         (s"r${k % 5}", s"p$k", i.toLong, rnd.alphanumeric.take(8).mkString)
       }
       val df = rows.toDF("repo", "path", "seq", "content")
-      val got = Dedupe.lwwSalted(df, Seq("repo", "path"), "seq", 4)
-        .select($"repo", $"path", $"seq", $"content")
-        .as[(String, String, Long, String)].collect()
-        .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
       val oracle = rows.foldLeft(Map.empty[(String, String), (Long, String)]) {
         case (m, (r, p, s, c)) =>
           val k = (r, p)
           if (m.get(k).forall(_._1 < s)) m.updated(k, (s, c)) else m
       }
-      assert(got === oracle, s"trial $trial")
+      val salted: Lww = Dedupe.lwwSalted(_, _, _, 4)
+      (("lwwSalted" -> salted) +: broadcastPaths).foreach { case (name, f) =>
+        val got = f(df, Seq("repo", "path"), "seq")
+          .select($"repo", $"path", $"seq", $"content")
+          .as[(String, String, Long, String)].collect()
+          .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
+        assert(got === oracle, s"trial $trial $name")
+      }
     }
+  }
+
+  test("all-null-seq key: lwwBroadcast drops it, lwwTyped (and the fallback) keep it with a null payload") {
+    val df = Seq(("k1", Some(1L), "a"), ("k1", Some(2L), "b"), ("k2", None, "c"), ("k2", None, "d"))
+      .toDF("id", "seq", "content")
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.select($"id", $"seq", $"content").as[(String, Option[Long], Option[String])].collect().toSet
+    assert(rows(Dedupe.lwwBroadcast(df, Seq("id"), "seq")) === Set(("k1", Some(2L), Some("b"))))
+    val kept = Set(("k1", Some(2L), Some("b")), ("k2", None, None))
+    assert(rows(Dedupe.lwwTyped(df, Seq("id"), "seq")) === kept)
+    assert(rows(Dedupe.lwwBroadcast(df, Seq("id"), "seq", 0L)) === kept)
   }
 
   test("malformed payloads survive the pipeline: corrupt JSON → null columns, no crash") {
